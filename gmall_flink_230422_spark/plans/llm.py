@@ -71,6 +71,9 @@ def _materialize(df):
     import os
 
     mode = os.environ.get("SPARK_GRAFT_MATERIALIZE", "eager_ckpt")
+    if mode not in ("eager_ckpt", "lazy_ckpt", "cache", "none"):
+        raise ValueError(f"unknown SPARK_GRAFT_MATERIALIZE={mode!r}: expected one of "
+                         "eager_ckpt, lazy_ckpt, cache, none")
     if mode == "none":
         return df
     if mode == "cache":

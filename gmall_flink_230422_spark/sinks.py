@@ -14,9 +14,11 @@
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from .operators.stateful import latest_by_key
 
@@ -71,30 +73,60 @@ def fan_out_sink(
 ):
     """T6/S12: one streaming query, N outputs — the side-output pattern.
 
-    The reference fans BaseLogApp into 5 topics + dirty via side outputs
-    (BaseLogApp.java:93-174). In Spark the cheap equivalent is a single
-    ``foreachBatch`` that applies the splitter to each micro-batch and
-    writes every branch to its own parquet "topic" — the source is read
-    once per batch (N writeStream queries would read it N times).
+    One AvailableNow ``foreachBatch`` query reads the source once per
+    micro-batch, persists the batch, applies ``split_fn`` (batch DataFrame ->
+    dict[name, DataFrame]) and writes every branch to its own parquet topic
+    ``out_dir/<name>/batch_id=N``:
 
-    Exactly-once story: each branch batch lands in a ``batch_id=N``
-    subdirectory with ``mode("overwrite")``, so a crash-and-replay of batch N
-    overwrites the same directories instead of appending duplicates — the
-    idempotent-replay pattern, same as upsert_parquet. Consumers read
-    ``out_dir/<name>`` and see ``batch_id`` as a discovered partition column
-    (the Kafka offset analog); drop it if unwanted.
+    - Writer count: each branch is coalesced to
+      ``max(1, ceil(size / spark.sql.files.maxPartitionBytes))`` partitions,
+      where ``size`` is Catalyst's estimate for the micro-batch (read from
+      its optimized plan's statistics, no job). A batch below
+      maxPartitionBytes (128 MB by default) therefore runs each branch's
+      whole job (cache fill, split, write) as one task and lands one file,
+      however many partitions the file reader split it into; a larger batch
+      gets one writer per maxPartitionBytes.
+    - Branches run concurrently, one thread each. Every thread inherits the
+      streaming thread's local properties (job group, streaming query id,
+      job tags), so ``StreamingQuery.stop()`` cancels the branch jobs and
+      listeners attribute them to the query. The branch jobs can take every
+      core, so under the default FIFO scheduler jobs of other queries in the
+      same session wait behind them.
+    - The batch is unpersisted after every branch has finished; the first
+      branch error (in ``split_fn`` order) then fails the micro-batch.
 
-    ``split_fn``: batch DataFrame -> dict[name, DataFrame].
+    Exactly-once: each branch writes its ``batch_id=N`` directory with
+    ``mode("overwrite")``, so a replay of batch N after a failure overwrites
+    whatever the failed attempt left instead of appending duplicates.
+    Consumers read ``out_dir/<name>`` and see ``batch_id`` as a discovered
+    partition column (the Kafka offset analog).
+
     Returns the started StreamingQuery (caller awaits/stops).
     """
 
     def write_all(batch_df, batch_id):
+        spark = batch_df.sparkSession
+        size = int(batch_df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        file_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        # coalesce takes an int; an unknown size (Long.MaxValue) keeps every partition
+        writers = min(max(1, -(-size // file_bytes)), 2**31 - 1)
+
+        def write(branch, path):
+            branch.coalesce(writers).write.mode("overwrite").parquet(path)
+
         batch_df.persist()
         try:
-            for name, branch in split_fn(batch_df).items():
-                branch.write.mode("overwrite").parquet(
-                    os.path.join(out_dir, name, f"batch_id={batch_id}")
-                )
+            branches = split_fn(batch_df)
+            with ThreadPoolExecutor(max_workers=max(1, len(branches))) as pool:
+                # one wrapper per branch: each clones the local properties, and
+                # Spark mutates them per job (execution id), so threads must not share one
+                futures = [
+                    pool.submit(inheritable_thread_target(spark)(write), branch,
+                                os.path.join(out_dir, name, f"batch_id={batch_id}"))
+                    for name, branch in branches.items()
+                ]
+            for f in futures:
+                f.result()
         finally:
             batch_df.unpersist()
 

@@ -15,10 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def batch_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def stream_parquet(
     spark: SparkSession, path: str, schema: T.StructType, files_per_trigger: int = 1
 ) -> DataFrame:
@@ -101,16 +97,6 @@ def write_chunks_by(
         ).parquet(path)
         seen = _force_mtime(path, seen, base + i)
     return path
-
-
-def stream_json_lines(
-    spark: SparkSession, path: str, schema: T.StructType, files_per_trigger: int = 1
-) -> DataFrame:
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .json(path)
-    )
 
 
 def stream_text(spark: SparkSession, path: str, files_per_trigger: int = 1) -> DataFrame:

@@ -14,13 +14,14 @@ either:
   plan (was 7x), and results must match the uncached brute computation;
 - plans.llm._materialize honors SPARK_GRAFT_MATERIALIZE and every mode
   returns the same rows (the audit's `none` mode and the A/B modes must
-  never drift from the default).
+  never drift from the default); an unknown mode raises.
 """
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from gmall_flink_230422_spark.operators import dedup, text
@@ -158,3 +159,11 @@ def test_materialize_modes_agree(spark):
         else:
             os.environ[key] = prev
     assert outs["eager_ckpt"] == outs["cache"] == outs["none"]
+
+
+def test_materialize_rejects_unknown_mode(monkeypatch):
+    from gmall_flink_230422_spark.plans.llm import _materialize
+
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "lazy")
+    with pytest.raises(ValueError, match="'lazy'"):
+        _materialize(None)
