@@ -8,8 +8,34 @@ side and the SQL side alias every computed column identically.
 
 from __future__ import annotations
 
+import atexit
+import itertools
+import os
+import shutil
+import tempfile
+import threading
 from dataclasses import dataclass, field
 from collections.abc import Callable
+
+_scratch_root: str | None = None
+_scratch_seq = itertools.count()
+_scratch_lock = threading.Lock()
+
+
+def scratch_dir(name: str) -> str:
+    """A fresh, empty directory for one query's sources, sinks and
+    checkpoints. All of them live under one per-process root (made on first
+    use under ``TMPDIR``) that is removed at interpreter exit, not on
+    return: queries hand back lazy ``spark.read.parquet`` frames over these
+    directories, so the files must outlive the call."""
+    global _scratch_root
+    with _scratch_lock:
+        if _scratch_root is None:
+            _scratch_root = tempfile.mkdtemp(prefix="gmall_scratch_")
+            atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
+        path = os.path.join(_scratch_root, f"{name}_{next(_scratch_seq)}")
+    os.makedirs(path)
+    return path
 
 
 @dataclass(frozen=True)

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..io import ensure_parallelism, load_table
 from ..operators import cdc as cdc_ops
-from . import QuerySpec
+from . import QuerySpec, scratch_dir
 
 _TS = "1704067200"  # constant Maxwell ts (not projected by any query)
 
@@ -597,8 +597,6 @@ def q_dim_app_sync(spark, sf_dir):
     through TWO config generations (the superseded one selects an extra
     column — the latest config wins, proving the re-read). Returns the
     synced dim table."""
-    import tempfile
-
     from ..apps import dim_app
 
     c = load_table(spark, sf_dir, "customer")
@@ -614,7 +612,7 @@ def q_dim_app_sync(spark, sf_dir):
         ],
         ["source_table", "sink_table", "sink_columns", "sink_pk", "config_seq"],
     )
-    base = tempfile.mkdtemp(prefix="dim_app_sync_")
+    base = scratch_dir("dim_app_sync")
     out = dim_app(spark, cdc, config, base)["dim_user_info"]
     return out.select(
         F.col("id").cast("bigint").alias("id"), F.col("create_time")
@@ -643,8 +641,6 @@ def q_dim_app_sync_incremental(spark, sf_dir):
     path can't produce (it applies gen 2 to everything). Output compares
     the two paths: create_time must agree (paths_agree), user_name is the
     incremental path's generation-dependent column."""
-    import tempfile
-
     from ..apps import dim_app, dim_app_incremental
 
     c = load_table(spark, sf_dir, "customer")
@@ -658,11 +654,11 @@ def q_dim_app_sync_incremental(spark, sf_dir):
         ],
         ["source_table", "sink_table", "sink_columns", "sink_pk", "config_seq", "op"],
     )
-    base_i = tempfile.mkdtemp(prefix="dim_incr_")
+    base_i = scratch_dir("dim_incr")
     incr = dim_app_incremental(
         spark, [(batch1, 1), (batch2, 2)], changelog, base_i
     )["dim_user_info"]
-    base_s = tempfile.mkdtemp(prefix="dim_snap_")
+    base_s = scratch_dir("dim_snap")
     snap = dim_app(
         spark, _materialize([ins, upd], via_json=True), changelog.drop("op"), base_s
     )["dim_user_info"]

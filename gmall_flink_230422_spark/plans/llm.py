@@ -26,62 +26,38 @@ def _docs_par(spark, sf_dir):
 def _materialize(df):
     """Materialize-once point for a multi-consumer capstone frame.
 
-    Default is the r11 local checkpoint (``localCheckpoint(eager=False)``,
-    which under AQE materializes at DataFrame-construction time):
-    downstream plans see an O(1) RDD leaf — Catalyst stops re-analyzing
-    the registry's widest trees per action (the r11 warm win). The r12
-    fresh-session interleaved A/B (3 reps × 3 modes × 3 capstones, all
-    checksum-identical) measured, min-of-3 cold/warm:
-      x_curate_funnel   eager 38.6/1.25   cache 37.3/3.09   lazy 45.6/4.74
-      x_curate_corpus   eager 33.7/1.05   cache 38.0/1.58   lazy 34.6/4.18
-      x_select_pipeline eager 11.4/0.77   cache 15.7/1.17   lazy 14.1/2.38
-    i.e. on a controlled same-machine A/B the checkpoint form is equal
-    or better COLD too — the r11 verdict's 9.5 → 26.6 s cold pairing
-    compared two different machine-speed sessions. The truly-lazy form
-    (operators.graph.lazy_checkpoint, AQE-off compile) measured strictly
-    worse on both axes here and stays for the tiny iterative frames it
-    was built for. The structural cold fix is fewer/narrower
-    materialized frames (one combined keep-flags frame per capstone, r12
-    — see q_curate_funnel), not the materialization mode.
+    Returns ``df.localCheckpoint(eager=False)``, which under AQE
+    materializes at DataFrame-construction time: downstream plans see an
+    O(1) RDD leaf, so Catalyst does not re-analyze the registry's widest
+    trees on every action. Output is identical to the unmaterialized frame.
 
-    ``SPARK_GRAFT_MATERIALIZE`` selects the strategy explicitly:
-      - ``eager_ckpt`` (default): the r11 localCheckpoint form.
-      - ``lazy_ckpt``: operators.graph.lazy_checkpoint (kept for A/B).
-      - ``cache``: plain .cache() (the pre-r11 form, kept for A/B).
-      - ``none``: no materialization — full lineage visible. Used by
-        tools/audit_plans.py so the plan audit sees the construction
-        subtrees of checkpointed queries (r11 verdict item 6: the
-        post-materialization plan has zero FileScans and blinded the
-        BatchEvalPython / scan-repeat / shuffle gates).
+    ``SPARK_GRAFT_MATERIALIZE`` takes one of two values:
+      - ``eager_ckpt`` (default): the local checkpoint above.
+      - ``none``: no materialization, so the full lineage stays visible.
+        tools/audit_plans.py uses it so the plan audit sees the
+        construction subtrees (a checkpointed plan has no FileScans and
+        would blind the BatchEvalPython / scan-repeat / shuffle gates).
+    Any other value raises ``ValueError``.
 
-    clearCache note (r11 advice): localCheckpoint blocks are NOT
-    registered with the CacheManager, so ``spark.catalog.clearCache()``
-    (bench.py's SPARK_GRAFT_CLEARCACHE probe) does not free them; they
-    are released when the DataFrame/RDD refs are GC'd. A long session
-    that re-constructs these queries many times should drop the frames
-    (or use mode ``cache``) rather than rely on clearCache.
+    localCheckpoint blocks are not registered with the CacheManager, so
+    ``spark.catalog.clearCache()`` does not free them; they are released
+    when the DataFrame/RDD refs are GC'd. A long session that rebuilds
+    these queries many times should drop the frames.
 
-    Fault-tolerance note (guide §5): localCheckpoint trades the
-    intermediates' recomputability for speed — an executor loss mid-query
-    fails the job instead of recomputing. A cluster deployment with
-    unreliable executors should persist these frames to durable storage
-    (parquet checkpoint between curation stages) instead; this local
-    stand-in models that materialization boundary.
+    Fault tolerance: localCheckpoint trades the intermediates'
+    recomputability for speed — an executor loss mid-query fails the job
+    instead of recomputing. A cluster with unreliable executors should
+    persist these frames to durable storage (a parquet checkpoint between
+    curation stages) instead; this local stand-in models that boundary.
     """
     import os
 
     mode = os.environ.get("SPARK_GRAFT_MATERIALIZE", "eager_ckpt")
-    if mode not in ("eager_ckpt", "lazy_ckpt", "cache", "none"):
+    if mode not in ("eager_ckpt", "none"):
         raise ValueError(f"unknown SPARK_GRAFT_MATERIALIZE={mode!r}: expected one of "
-                         "eager_ckpt, lazy_ckpt, cache, none")
+                         "eager_ckpt, none")
     if mode == "none":
         return df
-    if mode == "cache":
-        return df.cache()
-    if mode == "lazy_ckpt":
-        from ..operators.graph import lazy_checkpoint
-
-        return lazy_checkpoint(df)
     return df.localCheckpoint(eager=False)
 
 
@@ -1104,7 +1080,7 @@ def q_curate_funnel(spark, sf_dir):
     # 2.71 -> 0.99 s, bit-identical). r12 re-examined the r11 verdict's
     # cold-regression claim with a controlled fresh-session interleaved
     # A/B (3 modes × 3 reps, checksum-identical; numbers in
-    # _materialize's docstring): on the same machine the checkpoint form
+    # OPTIMIZATION_r12.md): on the same machine the checkpoint form
     # is cold-EQUAL to the pre-r11 cache form (38.6 vs 37.3 s) and 2.5×
     # faster warm, so it stays. Two restructures measured WORSE and were
     # rejected (OPTIMIZATION_r12.md: truly-lazy checkpoint; single
@@ -3518,21 +3494,13 @@ def q_select_pipeline(spark, sf_dir):
             (F.col("k_rep") & F.col("k_clf")).alias("k2"),
         )
     )
-    # r11 stage 3 (guide §3.3 truncate very wide plans, §5 cache vs
-    # localCheckpoint): ``flags`` has two genuine consumers (the
-    # threshold histogram chain and the f3 re-attach below), each of
-    # which used to re-analyze and re-execute the whole LM-join
-    # subtree per action. Materializing the NARROW per-doc flag frame
-    # (5 scalar columns) once behind a local checkpoint leaves
-    # downstream plans an O(1) RDD leaf — Catalyst stops re-walking
-    # the LM lineage twice per action. plain .cache() was A/B-measured
-    # WORSE than no materialization here (InMemoryRelation
-    # lookup/normalization overhead on every downstream analysis);
-    # the checkpoint form measured 1.77 -> 0.69 s warm min-of-10
-    # interleaved, output bit-identical. r12: via _materialize
-    # (truly-lazy checkpoint) — the r11 eager-under-AQE form cost
-    # 5.45 → 25.4 s cold (verdict item 1); the lazy form materializes
-    # inside the first action, cold parity + warm win.
+    # ``flags`` has two consumers (the threshold histogram chain and the
+    # f3 re-attach below). _materialize puts this narrow per-doc frame
+    # (5 scalar columns) behind localCheckpoint(eager=False), which AQE
+    # materializes here, at construction: both consumers read an O(1) RDD
+    # leaf instead of re-analyzing and re-running the LM-join subtree.
+    # Plain .cache() measured slower than no materialization here
+    # (InMemoryRelation overhead on every downstream analysis).
     flags = _materialize(flags)
     # CCNet t2 (head+middle boundary) over stage-2 survivors with a score
     surv = flags.filter(F.col("k2") & F.col("avg_surprisal").isNotNull())

@@ -39,14 +39,14 @@ instead of a server-side index structure.
 from __future__ import annotations
 
 import os
-import tempfile
 from pathlib import Path
 
 from pyspark.sql import functions as F
 
 from ..operators import similarity
-from . import QuerySpec
+from . import QuerySpec, scratch_dir
 from .llm import ORACLE_ANN_IVF, _QUERY_IDS, _embs_par
+from .streamq import drain
 
 SPECS: list[QuerySpec] = []
 
@@ -171,13 +171,11 @@ def q_stream_ann_ivf_persisted(spark, sf_dir):
 
     index_p, cents_p = ensure_ivf_index(spark, sf_dir)
     e = _embs_par(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_annpersist_")
+    tmp = scratch_dir("streamq_annpersist")
     src = os.path.join(tmp, "queries")
     sink = os.path.join(tmp, "sink")
-    ck = os.path.join(tmp, "ck")
     e.filter(F.col("vec_id") % 100 == 1).repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
     def _probe(batch, batch_id: int) -> None:
         s = batch.sparkSession
@@ -191,13 +189,7 @@ def q_stream_ann_ivf_persisted(spark, sf_dir):
             os.path.join(sink, f"batch_id={batch_id}")
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_probe)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _probe, tmp)
     # drop the discovered batch_id partition column — physical lineage,
     # not part of the probe result contract
     return spark.read.parquet(sink).drop("batch_id")
@@ -277,12 +269,11 @@ def q_stream_ann_index_upsert(spark, sf_dir):
     e = _embs_par(spark, sf_dir)
     base = e.filter(F.col("vec_id") % 10 != 7)
     fresh = e.filter(F.col("vec_id") % 10 == 7)
-    tmp = tempfile.mkdtemp(prefix="streamq_annupsert_")
+    tmp = scratch_dir("streamq_annupsert")
     cents_p = os.path.join(tmp, "cents")
     base_p = os.path.join(tmp, "base")
     delta_p = os.path.join(tmp, "delta")
     src = os.path.join(tmp, "arrivals")
-    ck = os.path.join(tmp, "ck")
 
     similarity.ivf_centroids(base, n_centroids=16).write.parquet(cents_p)
     cents = spark.read.parquet(cents_p)
@@ -293,8 +284,7 @@ def q_stream_ann_index_upsert(spark, sf_dir):
     )
 
     fresh.repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
     def _ingest(batch, batch_id: int) -> None:
         s = batch.sparkSession
@@ -303,13 +293,7 @@ def q_stream_ann_index_upsert(spark, sf_dir):
             os.path.join(delta_p, f"ingest_batch={batch_id}")
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _ingest, tmp)
 
     # hive-style discovery reads both partition levels (ingest_batch, list_id)
     full = spark.read.parquet(base_p).select("vec_id", "list_id").unionByName(

@@ -31,15 +31,14 @@ server-side state.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
 from ..operators import dedup, text
-from . import QuerySpec
+from . import QuerySpec, scratch_dir
 from .llm import ORACLE_BPE_APPLY, ORACLE_LM_SCORE, _docs_par
 from .r10 import _sf_tag, _warehouse_root, corpus_token
-from .streamq import ORACLE_STREAM_LSH_INCR
+from .streamq import ORACLE_STREAM_LSH_INCR, drain
 
 SPECS: list[QuerySpec] = []
 
@@ -129,15 +128,13 @@ def q_stream_lsh_persisted(spark, sf_dir):
 
     store_p = ensure_lsh_store(spark, sf_dir)
     d = _docs_par(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_lshpersist_")
+    tmp = scratch_dir("streamq_lshpersist")
     src = os.path.join(tmp, "docs")
     sink = os.path.join(tmp, "flags")
-    ck = os.path.join(tmp, "ck")
     d.filter(F.col("doc_id") % 3 == 1).select("doc_id", "text").repartition(
         4
     ).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
     def _probe(batch, batch_id: int) -> None:
         s = batch.sparkSession
@@ -167,13 +164,7 @@ def q_stream_lsh_persisted(spark, sf_dir):
             os.path.join(sink, f"batch_id={batch_id}")
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_probe)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _probe, tmp)
     return spark.read.parquet(sink).drop("batch_id")
 
 
@@ -241,11 +232,10 @@ def q_stream_lsh_store_upsert(spark, sf_dir):
     d = _docs_par(spark, sf_dir)
     base = d.filter(F.col("doc_id") % 3 != 1)
     fresh = d.filter(F.col("doc_id") % 3 == 1).select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="streamq_lshupsert_")
+    tmp = scratch_dir("streamq_lshupsert")
     base_p = os.path.join(tmp, "base")
     delta_p = os.path.join(tmp, "delta")
     src = os.path.join(tmp, "arrivals")
-    ck = os.path.join(tmp, "ck")
 
     (
         dedup.band_signatures(dedup.minhash_signatures(dedup.shingles(base)))
@@ -254,8 +244,7 @@ def q_stream_lsh_store_upsert(spark, sf_dir):
     )
 
     fresh.repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
     def _ingest(batch, batch_id: int) -> None:
         sigs = dedup.band_signatures(dedup.minhash_signatures(dedup.shingles(batch)))
@@ -263,13 +252,7 @@ def q_stream_lsh_store_upsert(spark, sf_dir):
             os.path.join(delta_p, f"ingest_batch={batch_id}")
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _ingest, tmp)
 
     live = _read_lsh_store(spark, base_p).unionByName(
         _read_lsh_store(spark, delta_p).select("doc_id", "band_sig", "band")
@@ -292,7 +275,7 @@ def q_lsh_store_compact(spark, sf_dir):
     d = _docs_par(spark, sf_dir)
     base = d.filter(F.col("doc_id") % 3 != 1)
     fresh = d.filter(F.col("doc_id") % 3 == 1)
-    tmp = tempfile.mkdtemp(prefix="r11_lshcompact_")
+    tmp = scratch_dir("r11_lshcompact")
     base_p = os.path.join(tmp, "base")
     delta_p = os.path.join(tmp, "delta")
     compact_p = os.path.join(tmp, "compacted")
@@ -575,13 +558,11 @@ def q_stream_ingest_gate(spark, sf_dir):
     batch-boundary-invariant and the batch oracle applies verbatim."""
     from ..sources import files
 
-    tmp = tempfile.mkdtemp(prefix="streamq_ingestgate_")
+    tmp = scratch_dir("streamq_ingestgate")
     src = os.path.join(tmp, "arrivals")
     sink = os.path.join(tmp, "verdicts")
-    ck = os.path.join(tmp, "ck")
     _incoming(spark, sf_dir).repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
     def _gate(batch, batch_id: int) -> None:
         out = _gate_verdicts(batch.sparkSession, sf_dir, batch)
@@ -589,13 +570,7 @@ def q_stream_ingest_gate(spark, sf_dir):
             os.path.join(sink, f"batch_id={batch_id}")
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _gate, tmp)
     return spark.read.parquet(sink).drop("batch_id")
 
 
@@ -674,7 +649,7 @@ def q_ann_index_compact(spark, sf_dir):
     e = _embs_par(spark, sf_dir)
     base = e.filter(F.col("vec_id") % 10 != 7)
     fresh = e.filter(F.col("vec_id") % 10 == 7)
-    tmp = tempfile.mkdtemp(prefix="r11_compact_")
+    tmp = scratch_dir("r11_compact")
     cents_p = os.path.join(tmp, "cents")
     base_p = os.path.join(tmp, "base")
     delta_p = os.path.join(tmp, "delta")

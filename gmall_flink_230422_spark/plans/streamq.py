@@ -11,9 +11,17 @@ Mechanics per query:
    the deterministic Kafka stand-in (sources/files.py);
 2. run the SAME operator composition as the batch twin
    (``operators/windows.py``) on the ``readStream`` DataFrame;
-3. land the complete-mode aggregate image via ``foreachBatch`` +
-   ``Trigger.AvailableNow`` (process-everything-then-stop) and read the
-   final image back.
+3. run it with ``drain``, the one runner every twin here and in r10/r11
+   uses: a checkpointed ``foreachBatch`` under ``Trigger.AvailableNow``
+   (process everything, then stop) that blocks until the query ends and
+   re-raises its error. ``_drain_complete`` lands the final complete-mode
+   image, ``_drain_append`` every appended row; twins with their own
+   per-batch logic pass their landing function to ``drain`` directly. The
+   result is read back as a batch DataFrame.
+
+Every source, sink and checkpoint directory comes from ``scratch_dir``
+(plans/__init__.py): one per-process root under ``TMPDIR``, removed at
+interpreter exit — after the lazy frames the twins return are consumed.
 
 Because complete mode emits the full aggregate state and AvailableNow
 drains every file, the result is batch-equal by construction — each query
@@ -30,7 +38,6 @@ MyKafkaUtil.java:21-60 (file-stream stand-in — no broker in the sandbox).
 
 from __future__ import annotations
 
-import tempfile
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,7 +48,7 @@ from ..operators import windows
 from ..sources import files
 from ..streaming import joins as sjoins
 from ..streaming import stateful as sstate
-from . import QuerySpec
+from . import QuerySpec, scratch_dir
 from .analytics import (
     ORACLE_CUMULATE,
     ORACLE_MV_MERGE,
@@ -77,12 +84,11 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events as a replayed multi-file micro-batch stream (ts already
     micros — the nanos conversion happens in the batch re-chunk write)."""
     _clamp_shuffle(spark)
-    tmp = tempfile.mkdtemp(prefix="streamq_src_")
+    tmp = scratch_dir("streamq_src")
     src = os.path.join(tmp, "events")
     ev = load_table(spark, sf_dir, "events")
     ev.repartition(8).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    return files.stream_parquet(spark, src, schema, files_per_trigger=2)
+    return files.stream_parquet(spark, src, files_per_trigger=2)
 
 
 def _ordered_events_source(
@@ -93,7 +99,7 @@ def _ordered_events_source(
     watermarked joins see in-order arrival across micro-batches, the same
     contract a Kafka topic keyed by mid gives the reference's keyed streams."""
     _clamp_shuffle(spark)
-    tmp = tempfile.mkdtemp(prefix="streamq_ord_")
+    tmp = scratch_dir("streamq_ord")
     src = os.path.join(tmp, "events")
     ev = load_table(spark, sf_dir, "events").select(*cols)
     if extra is not None:
@@ -102,37 +108,36 @@ def _ordered_events_source(
     return src
 
 
-def _drain_complete(out: DataFrame, name: str) -> str:
-    """Run a streaming aggregate to completion (AvailableNow), landing the
-    final complete-mode image as parquet; returns the image path."""
-    tmp = tempfile.mkdtemp(prefix=f"streamq_{name}_")
-    image = os.path.join(tmp, "image")
-    ck = os.path.join(tmp, "ck")
+def drain(stream: DataFrame, land, tmp: str, mode: str = "append") -> None:
+    """Run ``stream`` to completion under AvailableNow (process everything,
+    then stop): each micro-batch goes to ``land(batch, batch_id)`` and the
+    checkpoint lives in ``tmp/ck``. Blocks until the query ends; a query
+    error re-raises here."""
     q = (
-        out.writeStream.outputMode("complete")
-        .foreachBatch(lambda b, _i: b.write.mode("overwrite").parquet(image))
-        .option("checkpointLocation", ck)
+        stream.writeStream.outputMode(mode)
+        .foreachBatch(land)
+        .option("checkpointLocation", os.path.join(tmp, "ck"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
+
+
+def _drain_complete(out: DataFrame, name: str) -> str:
+    """Drain a streaming aggregate, landing its final complete-mode image
+    as parquet; returns the image path."""
+    tmp = scratch_dir(f"streamq_{name}")
+    image = os.path.join(tmp, "image")
+    drain(out, lambda b, _i: b.write.mode("overwrite").parquet(image), tmp, "complete")
     return image
 
 
 def _drain_append(out: DataFrame, name: str) -> str:
-    """Run an append-mode streaming pipeline to completion (AvailableNow),
-    landing every emitted row as parquet; returns the output path."""
-    tmp = tempfile.mkdtemp(prefix=f"streamq_{name}_")
+    """Drain an append-mode streaming pipeline, landing every emitted row
+    as parquet; returns the output path."""
+    tmp = scratch_dir(f"streamq_{name}")
     sink = os.path.join(tmp, "sink")
-    ck = os.path.join(tmp, "ck")
-    q = (
-        out.writeStream.outputMode("append")
-        .foreachBatch(lambda b, _i: b.write.mode("append").parquet(sink))
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(out, lambda b, _i: b.write.mode("append").parquet(sink), tmp)
     return sink
 
 
@@ -236,7 +241,7 @@ def q_stream_late_data(spark, sf_dir):
     from ..functions.hashing import portable_hash64
 
     _clamp_shuffle(spark)
-    tmp = tempfile.mkdtemp(prefix="streamq_late_")
+    tmp = scratch_dir("streamq_late")
     src = os.path.join(tmp, "events")
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
     chunked = ev.withColumn(
@@ -247,8 +252,7 @@ def q_stream_late_data(spark, sf_dir):
         ),
     )
     files.write_chunks_by(chunked, "_chunk", src, LATE_CHUNKS)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
     out = (
         stream.withWatermark("ts", f"{LATE_WM_S} seconds")
         .groupBy(F.window("ts", "1 hour").alias("w"))
@@ -338,9 +342,8 @@ def q_stream_hll_distinct(spark, sf_dir):
     from ..operators import sketches
 
     ev = _events_stream(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_hll_")
+    tmp = scratch_dir("streamq_hll")
     store = os.path.join(tmp, "registers")
-    ck = os.path.join(tmp, "ck")
 
     def _land(batch: DataFrame, batch_id: int) -> None:
         regs = sketches.hll_buckets(
@@ -350,13 +353,7 @@ def q_stream_hll_distinct(spark, sf_dir):
             os.path.join(store, f"batch_id={batch_id}")
         )
 
-    q = (
-        ev.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(ev, _land, tmp)
     merged = (
         spark.read.parquet(store)
         .groupBy("event_type", "_bucket")
@@ -408,14 +405,12 @@ def q_stream_upsert_latest(spark, sf_dir):
     from .. import sinks
 
     _clamp_shuffle(spark)
-    tmp = tempfile.mkdtemp(prefix="streamq_s8_")
+    tmp = scratch_dir("streamq_s8")
     src = os.path.join(tmp, "src")
     store = os.path.join(tmp, "store")
-    ck = os.path.join(tmp, "ck")
     o = load_table(spark, sf_dir, "orders")
     o.repartition(8).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=2)
+    stream = files.stream_parquet(spark, src, files_per_trigger=2)
 
     def _merge(batch: DataFrame, _i: int) -> None:
         sinks.upsert_parquet(
@@ -428,13 +423,7 @@ def q_stream_upsert_latest(spark, sf_dir):
             ["o_orderdate", "o_orderkey"],
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _merge, tmp)
     return spark.read.parquet(store).select(
         "o_custkey", "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -448,8 +437,7 @@ def q_stream_daily_uv(spark, sf_dir):
     dedup key, so WHICH first-seen row survives cannot change the per-day
     count — batch-equal regardless of micro-batch boundaries."""
     src = _ordered_events_source(spark, sf_dir, ["user_id", "ts", "event_id"])
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
     firsts = sstate.daily_first_stream(stream, ["user_id"], "ts")
     out = spark.read.parquet(_drain_append(firsts, "t3"))
     return (
@@ -466,8 +454,7 @@ def q_stream_is_new(spark, sf_dir):
     counts by repaired flag. Ordering across micro-batches (write_time_chunks)
     makes the stateful first-date identical to the batch min-over-user form."""
     src = _ordered_events_source(spark, sf_dir, ["user_id", "ts"])
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
     repaired = sstate.repair_is_new_stream(stream, "user_id", "ts")
     out = spark.read.parquet(_drain_append(repaired, "t2"))
     return (
@@ -498,8 +485,7 @@ def q_stream_bounce(spark, sf_dir):
         )
     )
     src = _ordered_events_source(spark, sf_dir, ["user_id", "ts"], extra=sentinels)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
     bounces = sstate.bounce_stream(stream, "user_id", "ts", BOUNCE_GAP_S)
     out = spark.read.parquet(_drain_append(bounces, "t5"))
     return (
@@ -535,14 +521,13 @@ def q_stream_interval_join(spark, sf_dir):
     emit the complete match set under correct watermarks, so the result is
     batch-equal independent of micro-batch boundaries."""
     src = _ordered_events_source(spark, sf_dir, ["user_id", "ts", "event_type"])
-    schema = spark.read.parquet(src).schema
     views = (
-        files.stream_parquet(spark, src, schema, files_per_trigger=2)
+        files.stream_parquet(spark, src, files_per_trigger=2)
         .filter(F.col("event_type") == "view")
         .select(F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
     )
     clicks = (
-        files.stream_parquet(spark, src, schema, files_per_trigger=2)
+        files.stream_parquet(spark, src, files_per_trigger=2)
         .filter(F.col("event_type") == "click")
         .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
     )
@@ -600,14 +585,13 @@ def q_stream_left_outer_join(spark, sf_dir):
     src = _ordered_events_source(
         spark, sf_dir, ["user_id", "ts", "event_type"], extra=sentinels
     )
-    schema = spark.read.parquet(src).schema
     views = (
-        files.stream_parquet(spark, src, schema, files_per_trigger=2)
+        files.stream_parquet(spark, src, files_per_trigger=2)
         .filter(F.col("event_type") == "view")
         .select(F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
     )
     clicks = (
-        files.stream_parquet(spark, src, schema, files_per_trigger=2)
+        files.stream_parquet(spark, src, files_per_trigger=2)
         .filter(F.col("event_type") == "click")
         .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
     )
@@ -658,8 +642,7 @@ def q_stream_dedup(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     cols = ["event_id", "ts", "user_id", "value"]
     src = _ordered_events_source(spark, sf_dir, cols, extra=ev.select(*cols))
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=2)
+    stream = files.stream_parquet(spark, src, files_per_trigger=2)
     deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
@@ -697,10 +680,9 @@ def q_stream_dim_incremental(spark, sf_dir):
     from .dwd import _materialize, _user_info_branches
 
     _clamp_shuffle(spark)
-    tmp = tempfile.mkdtemp(prefix="streamq_s4i_")
+    tmp = scratch_dir("streamq_s4i")
     src = os.path.join(tmp, "src")
     base = os.path.join(tmp, "dim")
-    ck = os.path.join(tmp, "ck")
     c = load_table(spark, sf_dir, "customer")
     ins, upd = _user_info_branches(c)
     cdc = _materialize([ins, upd], via_json=True)
@@ -708,8 +690,7 @@ def q_stream_dim_incremental(spark, sf_dir):
         "_chunk", F.when(F.col("type") == "insert", 0).otherwise(1)
     )
     files.write_chunks_by(chunked, "_chunk", src, 2)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
     changelog = spark.createDataFrame(
         [
@@ -738,13 +719,7 @@ def q_stream_dim_incremental(spark, sf_dir):
         holder["last_wm"] = wm
         _dim_sync_batch(spark, batch, holder["state"], base)
 
-    q = (
-        stream.writeStream.foreachBatch(_sync)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _sync, tmp)
     return spark.read.parquet(os.path.join(base, "dim_user_info")).select(
         F.col("id").cast("bigint").alias("id"), "create_time", "user_name"
     )
@@ -784,11 +759,10 @@ def q_stream_lsh_incremental(spark, sf_dir):
     from ..operators import dedup
 
     _clamp_shuffle(spark)
-    tmp = tempfile.mkdtemp(prefix="streamq_lshinc_")
+    tmp = scratch_dir("streamq_lshinc")
     src = os.path.join(tmp, "docs")
     store = os.path.join(tmp, "sig_store")
     flags_dir = os.path.join(tmp, "flags")
-    ck = os.path.join(tmp, "ck")
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     n_docs = d.count()
@@ -800,8 +774,7 @@ def q_stream_lsh_incremental(spark, sf_dir):
         "_chunk", F.least(F.floor(F.col("doc_id") * 4 / F.lit(n_docs)), F.lit(3)).cast("int")
     )
     files.write_chunks_by(chunked, "_chunk", src, 4)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
     def _probe_and_merge(batch: DataFrame, batch_id: int) -> None:
         docs = batch.select("doc_id", "text")
@@ -832,13 +805,7 @@ def q_stream_lsh_incremental(spark, sf_dir):
         flags.write.mode("append").parquet(flags_dir)
         banded.select("band", "band_sig").write.mode("append").parquet(store)
 
-    q = (
-        stream.writeStream.foreachBatch(_probe_and_merge)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _probe_and_merge, tmp)
     return spark.read.parquet(flags_dir)
 
 
@@ -883,9 +850,8 @@ def q_stream_mv_merge(spark, sf_dir):
     full recompute (e_mv_merge's oracle verbatim) — the green row proves
     stream-merge == recompute end-to-end."""
     _clamp_shuffle(spark)
-    tmp = tempfile.mkdtemp(prefix="streamq_mv_")
+    tmp = scratch_dir("streamq_mv")
     mv = os.path.join(tmp, "mv")
-    ck = os.path.join(tmp, "ck")
     stream = _events_stream(spark, sf_dir)
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
@@ -907,13 +873,7 @@ def q_stream_mv_merge(spark, sf_dir):
             shutil.rmtree(mv)
         os.rename(gen, mv)
 
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _merge, tmp)
     return spark.read.parquet(mv).select(
         "dt",
         "event_type",
@@ -1028,22 +988,9 @@ def q_stream_markov(spark, sf_dir):
     src = _ordered_events_source(
         spark, sf_dir, ["user_id", "event_type", "ts", "event_id"]
     )
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
     trans = sstate.transitions_stream(stream, key="user_id")
-    tmp = tempfile.mkdtemp(prefix="streamq_markov_")
-    out_dir = os.path.join(tmp, "out")
-    ck = os.path.join(tmp, "ck")
-    q = (
-        trans.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    pairs = spark.read.parquet(out_dir)
+    pairs = spark.read.parquet(_drain_append(trans, "markov"))
     counts = pairs.groupBy("from_type", "to_type").agg(
         F.count(F.lit(1)).alias("n_trans")
     )
@@ -1074,26 +1021,13 @@ def q_stream_pit_features(spark, sf_dir):
     src = _ordered_events_source(
         spark, sf_dir, ["user_id", "event_id", "event_type", "ts", "value"]
     )
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1).select(
+    stream = files.stream_parquet(spark, src, files_per_trigger=1).select(
         "user_id", "event_id", "event_type",
         F.floor(F.col("ts").cast("double")).cast("long").alias("epoch"),
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
     )
     feats = sstate.trailing_features_stream(stream, key="user_id")
-    tmp = tempfile.mkdtemp(prefix="streamq_pit_")
-    out_dir = os.path.join(tmp, "out")
-    ck = os.path.join(tmp, "ck")
-    q = (
-        feats.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir).select(
+    return spark.read.parquet(_drain_append(feats, "pit")).select(
         "event_id", "user_id", "trail_cnt",
         (F.col("trail_cents") / 100.0).alias("trail_value"),
     )
@@ -1195,13 +1129,12 @@ def q_stream_order_preprocess(spark, sf_dir):
         F.lit(None).cast("map<string,string>").alias("old"),
         F.lit(far).cast("timestamp").alias("cdc_ts"),
     )
-    tmp = tempfile.mkdtemp(prefix="streamq_preproc_")
+    tmp = scratch_dir("streamq_preproc")
     src = os.path.join(tmp, "env")
     # 12 chunks: join-state peak ~ one chunk of rows (eviction happens at
     # batch boundaries), so finer chunks bound state independent of SF
     files.write_time_chunks(env.unionByName(sents), "cdc_ts", src, n_chunks=12)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=2)
+    stream = files.stream_parquet(spark, src, files_per_trigger=2)
 
     od = stream.filter(
         (F.col("table") == "order_detail") & (F.col("type") == "insert")
@@ -1310,13 +1243,12 @@ def q_stream_dedup_incremental(spark, sf_dir):
     d = _docs_par(spark, sf_dir)
     inc_pred = F.col("doc_id") % 5 == 0
     base = d.filter(~inc_pred)
-    tmp = tempfile.mkdtemp(prefix="streamq_incdedup_")
+    tmp = scratch_dir("streamq_incdedup")
     fp_dir = os.path.join(tmp, "base_fp")
     sh_dir = os.path.join(tmp, "base_sh")
     bands_dir = os.path.join(tmp, "base_bands")
     src = os.path.join(tmp, "incoming")
     sink = os.path.join(tmp, "sink")
-    ck = os.path.join(tmp, "ck")
 
     # ---- index build (batch, once — the persisted artifacts)
     base.select(dedup.fingerprint(F.col("text")).alias("fp")).distinct() \
@@ -1329,8 +1261,7 @@ def q_stream_dedup_incremental(spark, sf_dir):
 
     # ---- incoming delta as a multi-file replay stream
     d.filter(inc_pred).repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
     def _probe(batch: DataFrame, _i: int) -> None:
         s = batch.sparkSession
@@ -1391,13 +1322,7 @@ def q_stream_dedup_incremental(spark, sf_dir):
         )
         out.write.mode("append").parquet(sink)
 
-    q = (
-        stream.writeStream.foreachBatch(_probe)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _probe, tmp)
     return spark.read.parquet(sink)
 
 
@@ -1429,12 +1354,11 @@ def q_stream_ann_probe(spark, sf_dir):
 
     _clamp_shuffle(spark)
     e = _embs_par(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_annprobe_")
+    tmp = scratch_dir("streamq_annprobe")
     cents_dir = os.path.join(tmp, "cents")
     index_dir = os.path.join(tmp, "index")
     src = os.path.join(tmp, "queries")
     sink = os.path.join(tmp, "sink")
-    ck = os.path.join(tmp, "ck")
 
     # ---- index build (batch, once — the persisted artifacts)
     similarity.ivf_centroids(e, n_centroids=16).write.parquet(cents_dir)
@@ -1443,8 +1367,7 @@ def q_stream_ann_probe(spark, sf_dir):
 
     # ---- query stream as a multi-file replay
     e.filter(F.col("vec_id") % 100 == 0).repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
     def _probe(batch: DataFrame, _i: int) -> None:
         s = batch.sparkSession
@@ -1457,13 +1380,7 @@ def q_stream_ann_probe(spark, sf_dir):
         )
         out.write.mode("append").parquet(sink)
 
-    q = (
-        stream.writeStream.foreachBatch(_probe)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _probe, tmp)
     return spark.read.parquet(sink)
 
 
@@ -1505,14 +1422,13 @@ def q_stream_full_outer_join(spark, sf_dir):
     src = _ordered_events_source(
         spark, sf_dir, ["user_id", "ts", "event_type"], extra=sentinels
     )
-    schema = spark.read.parquet(src).schema
     views = (
-        files.stream_parquet(spark, src, schema, files_per_trigger=2)
+        files.stream_parquet(spark, src, files_per_trigger=2)
         .filter(F.col("event_type") == "view")
         .select(F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
     )
     clicks = (
-        files.stream_parquet(spark, src, schema, files_per_trigger=2)
+        files.stream_parquet(spark, src, files_per_trigger=2)
         .filter(F.col("event_type") == "click")
         .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
     )
@@ -1566,13 +1482,11 @@ def q_stream_drift(spark, sf_dir):
     commutative, so the merged drift equals batch x_embedding_drift
     REGARDLESS of micro-batch boundaries or replays. Same oracle."""
     e = load_table(spark, sf_dir, "embeddings")
-    tmp = tempfile.mkdtemp(prefix="streamq_drift_")
+    tmp = scratch_dir("streamq_drift")
     src = os.path.join(tmp, "vectors")
     store = os.path.join(tmp, "partials")
-    ck = os.path.join(tmp, "ck")
     e.repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
     def _land(batch: DataFrame, batch_id: int) -> None:
         comps = batch.select(
@@ -1593,13 +1507,7 @@ def q_stream_drift(spark, sf_dir):
             os.path.join(store, f"batch_id={batch_id}")
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _land, tmp)
     merged = (
         spark.read.parquet(store)
         .groupBy("dim")
@@ -1645,8 +1553,7 @@ def q_stream_funnel(spark, sf_dir):
     from ..streaming.stateful import funnel_stream
 
     src = _ordered_events_source(spark, sf_dir, ["user_id", "ts", "event_type"])
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=2)
+    stream = files.stream_parquet(spark, src, files_per_trigger=2)
     staged = funnel_stream(stream, key="user_id", ts_col="ts", type_col="event_type")
     out = spark.read.parquet(_drain_append(staged, "funnel"))
     per_user = out.groupBy("user_id").agg(
@@ -1682,8 +1589,7 @@ def q_stream_ewma(spark, sf_dir):
     from ..streaming.stateful import ewma_stream
 
     src = _ordered_events_source(spark, sf_dir, ["user_id", "event_id", "ts", "value"])
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=2).select(
+    stream = files.stream_parquet(spark, src, files_per_trigger=2).select(
         "user_id",
         "event_id",
         "ts",
@@ -1719,9 +1625,8 @@ def q_stream_cms_heavy(spark, sf_dir):
     from ..operators import sketches
 
     ev = _events_stream(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_cms_")
+    tmp = scratch_dir("streamq_cms")
     store = os.path.join(tmp, "grids")
-    ck = os.path.join(tmp, "ck")
 
     def _land(batch: DataFrame, batch_id: int) -> None:
         grid = sketches.cms_table(
@@ -1731,13 +1636,7 @@ def q_stream_cms_heavy(spark, sf_dir):
             os.path.join(store, f"batch_id={batch_id}")
         )
 
-    q = (
-        ev.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(ev, _land, tmp)
     merged = (
         spark.read.parquet(store)
         .groupBy("cms_row", "cms_col")
@@ -1818,8 +1717,7 @@ def q_stream_window_topk(spark, sf_dir):
     src = _ordered_events_source(
         spark, sf_dir, ["user_id", "ts", "event_type"], extra=sentinels
     )
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=2)
+    stream = files.stream_parquet(spark, src, files_per_trigger=2)
     counts = (
         stream.withWatermark("ts", "10 seconds")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -1827,9 +1725,8 @@ def q_stream_window_topk(spark, sf_dir):
         .select(F.col("w.start").cast("long").alias("stt"), "event_type", "ct")
     )
 
-    tmp = tempfile.mkdtemp(prefix="streamq_topk_")
+    tmp = scratch_dir("streamq_topk")
     sink = os.path.join(tmp, "sink")
-    ck = os.path.join(tmp, "ck")
 
     def rank_batch(b, _i):
         from pyspark.sql import Window as _W
@@ -1842,14 +1739,7 @@ def q_stream_window_topk(spark, sf_dir):
             .parquet(sink)
         )
 
-    q = (
-        counts.writeStream.outputMode("append")
-        .foreachBatch(rank_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(counts, rank_batch, tmp)
     return spark.read.parquet(sink).filter(
         F.col("event_type") != "_sentinel"
     ).select("stt", "rk", "event_type", "ct")
@@ -1914,9 +1804,8 @@ def q_stream_cusum(spark, sf_dir):
     src = _ordered_events_source(
         spark, sf_dir, ["user_id", "ts", "event_type", "value"], extra=sentinels
     )
-    schema = spark.read.parquet(src).schema
     stream = (
-        files.stream_parquet(spark, src, schema, files_per_trigger=2)
+        files.stream_parquet(spark, src, files_per_trigger=2)
         .join(F.broadcast(k_tab), "event_type")
         .select(
             "event_type",
@@ -1989,28 +1878,20 @@ def q_stream_embedding_cov(spark, sf_dir):
     from ..operators import similarity
 
     _clamp_shuffle(spark)
-    tmp = tempfile.mkdtemp(prefix="streamq_cov_")
+    tmp = scratch_dir("streamq_cov")
     src = os.path.join(tmp, "embeddings")
     em = load_table(spark, sf_dir, "embeddings")
     em.repartition(8).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=2)
+    stream = files.stream_parquet(spark, src, files_per_trigger=2)
 
     store = os.path.join(tmp, "grams")
-    ck = os.path.join(tmp, "ck")
 
     def _land(batch: DataFrame, batch_id: int) -> None:
         similarity.embedding_gram(batch).write.mode("overwrite").parquet(
             os.path.join(store, f"batch_id={batch_id}")
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _land, tmp)
     merged = (
         spark.read.parquet(store)
         .groupBy("i", "j")
@@ -2099,7 +1980,7 @@ def q_stream_safety_screen(spark, sf_dir):
     from .llm import safety_tail, safety_terms_df
 
     _clamp_shuffle(spark)
-    tmp = tempfile.mkdtemp(prefix="streamq_safety_")
+    tmp = scratch_dir("streamq_safety")
     src = os.path.join(tmp, "docs")
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     n = d.count()
@@ -2109,8 +1990,7 @@ def q_stream_safety_screen(spark, sf_dir):
         "_chunk", F.least(F.floor(F.col("doc_id") * 4 / F.lit(n)), F.lit(3)).cast("int")
     )
     files.write_chunks_by(chunked, "_chunk", src, 4)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
     toks = stream.select(
         "doc_id",
         F.explode(
@@ -2170,9 +2050,8 @@ def q_stream_holt(spark, sf_dir):
     src = _ordered_events_source(
         spark, sf_dir, ["user_id", "ts", "event_type", "value"], extra=sentinels
     )
-    schema = spark.read.parquet(src).schema
     stream = (
-        files.stream_parquet(spark, src, schema, files_per_trigger=2)
+        files.stream_parquet(spark, src, files_per_trigger=2)
         .select(
             "event_type",
             "ts",
@@ -2222,7 +2101,7 @@ def q_stream_entropy_filter(spark, sf_dir):
     from .llm import entropy_tail
 
     _clamp_shuffle(spark)
-    tmp = tempfile.mkdtemp(prefix="streamq_entropy_")
+    tmp = scratch_dir("streamq_entropy")
     src = os.path.join(tmp, "docs")
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     n = d.count()
@@ -2232,8 +2111,7 @@ def q_stream_entropy_filter(spark, sf_dir):
         "_chunk", F.least(F.floor(F.col("doc_id") * 4 / F.lit(n)), F.lit(3)).cast("int")
     )
     files.write_chunks_by(chunked, "_chunk", src, 4)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
     tc = (
         stream.select(
             "doc_id",
@@ -2286,9 +2164,8 @@ def q_stream_bottomk(spark, sf_dir):
     from ..functions.hashing import portable_hash64
 
     ev = _events_stream(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_bk_")
+    tmp = scratch_dir("streamq_bk")
     store = os.path.join(tmp, "grids")
-    ck = os.path.join(tmp, "ck")
 
     def _grid(df: DataFrame) -> DataFrame:
         h = portable_hash64(
@@ -2312,13 +2189,7 @@ def q_stream_bottomk(spark, sf_dir):
             os.path.join(store, f"batch_id={batch_id}")
         )
 
-    q = (
-        ev.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(ev, _land, tmp)
     merged = spark.read.parquet(store).groupBy("bucket").agg(F.min("s").alias("s"))
     return merged.select(
         F.col("bucket").cast("bigint").alias("bucket"),
@@ -2370,9 +2241,8 @@ def q_stream_welch_t2(spark, sf_dir):
     Scale/state: a 1-row conditional aggregate per batch (map-side
     combinable), KBs of landed state per trigger at any stream rate."""
     ev = _events_stream(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_welch_")
+    tmp = scratch_dir("streamq_welch")
     store = os.path.join(tmp, "grids")
-    ck = os.path.join(tmp, "ck")
 
     def _moments(df: DataFrame) -> DataFrame:
         cents = F.expr("CAST(round(value * 100) AS BIGINT)")
@@ -2391,13 +2261,7 @@ def q_stream_welch_t2(spark, sf_dir):
             os.path.join(store, f"batch_id={batch_id}")
         )
 
-    q = (
-        ev.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(ev, _land, tmp)
     m = spark.read.parquet(store).agg(
         F.sum("n_a").cast("bigint").alias("n_a"),
         F.sum("s_a").cast("bigint").alias("s_a"),
@@ -2453,9 +2317,8 @@ def q_stream_ohlc(spark, sf_dir):
     Scale/state: one day-keyed partial aggregate per batch (map-side
     combinable), bar-count-bounded landed state per trigger."""
     ev = _events_stream(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_ohlc_")
+    tmp = scratch_dir("streamq_ohlc")
     store = os.path.join(tmp, "bars")
-    ck = os.path.join(tmp, "ck")
 
     def _bars(df: DataFrame) -> DataFrame:
         cents = F.expr("CAST(round(value * 100) AS BIGINT)")
@@ -2479,13 +2342,7 @@ def q_stream_ohlc(spark, sf_dir):
             os.path.join(store, f"batch_id={batch_id}")
         )
 
-    q = (
-        ev.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(ev, _land, tmp)
     merged = spark.read.parquet(store).groupBy("dt").agg(
         F.sum("n_trades").cast("bigint").alias("n_trades"),
         F.min("o_key").alias("o_key"),
@@ -2530,21 +2387,14 @@ def q_stream_new_users(spark, sf_dir):
     Scale/state: per batch one distinct + one min agg, both
     map-side-combinable and bounded by the batch's own user set."""
     ev = _events_stream(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_newu_")
+    tmp = scratch_dir("streamq_newu")
     store = os.path.join(tmp, "idx")
-    ck = os.path.join(tmp, "ck")
 
     def _land(batch: DataFrame, batch_id: int) -> None:
         ud = batch.select("user_id", F.to_date("ts").alias("dt")).distinct()
         ud.write.mode("overwrite").parquet(os.path.join(store, f"batch_id={batch_id}"))
 
-    q = (
-        ev.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(ev, _land, tmp)
     ud = spark.read.parquet(store).select("user_id", "dt").distinct()
     first = ud.groupBy("user_id").agg(F.min("dt").alias("first_seen"))
     return (
@@ -2587,9 +2437,8 @@ def q_stream_quantile(spark, sf_dir):
     spend-quantile monitor at stream scale: per-batch state is the bin
     table (KBs), never the value stream."""
     ev = _events_stream(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_quant_")
+    tmp = scratch_dir("streamq_quant")
     store = os.path.join(tmp, "hists")
-    ck = os.path.join(tmp, "ck")
     cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
 
     def _land(batch: DataFrame, batch_id: int) -> None:
@@ -2600,13 +2449,7 @@ def q_stream_quantile(spark, sf_dir):
         )
         hist.write.mode("overwrite").parquet(os.path.join(store, f"batch_id={batch_id}"))
 
-    q = (
-        ev.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(ev, _land, tmp)
     hist = (
         spark.read.parquet(store)
         .groupBy("bin")
@@ -2679,9 +2522,8 @@ def q_stream_burst(spark, sf_dir):
     the oracle is the batch twin's VERBATIM (same semantics, streaming
     execution path)."""
     ev = _events_stream(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_burst_")
+    tmp = scratch_dir("streamq_burst")
     store = os.path.join(tmp, "hourly")
-    ck = os.path.join(tmp, "ck")
 
     def _land(batch: DataFrame, batch_id: int) -> None:
         g = batch.groupBy(
@@ -2689,13 +2531,7 @@ def q_stream_burst(spark, sf_dir):
         ).agg(F.count(F.lit(1)).alias("cnt"))
         g.write.mode("overwrite").parquet(os.path.join(store, f"batch_id={batch_id}"))
 
-    q = (
-        ev.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(ev, _land, tmp)
     hourly = (
         spark.read.parquet(store)
         .groupBy("event_type", "hr")
@@ -2763,10 +2599,9 @@ def q_stream_contam_13gram(spark, sf_dir):
 
     _clamp_shuffle(spark)
     d = _docs_par(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_contam13_")
+    tmp = scratch_dir("streamq_contam13")
     src = os.path.join(tmp, "eval_docs")
     store = os.path.join(tmp, "verdicts")
-    ck = os.path.join(tmp, "ck")
 
     # ---- index ensure (batch, once per sf): train split -> distinct 13-grams.
     # Fingerprint folds in the gram width k, an algorithm version, and the
@@ -2788,8 +2623,7 @@ def q_stream_contam_13gram(spark, sf_dir):
 
     # ---- eval docs as a multi-file replay stream
     d.filter(F.col("doc_id") % 17 == 0).repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
     def _probe(batch: DataFrame, batch_id: int) -> None:
         s = batch.sparkSession
@@ -2803,13 +2637,7 @@ def q_stream_contam_13gram(spark, sf_dir):
             os.path.join(store, f"batch_id={batch_id}")
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_probe)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _probe, tmp)
     return (
         spark.read.parquet(store)
         .select(
@@ -2839,14 +2667,12 @@ def q_stream_band_health(spark, sf_dir):
 
     _clamp_shuffle(spark)
     d = _docs_par(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_bandh_")
+    tmp = scratch_dir("streamq_bandh")
     src = os.path.join(tmp, "docs")
     store = os.path.join(tmp, "grids")
-    ck = os.path.join(tmp, "ck")
 
     d.repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
     def _land(batch: DataFrame, batch_id: int) -> None:
         sigs = dedup.minhash_signatures(dedup.shingles(batch), num_hashes=16)
@@ -2857,13 +2683,7 @@ def q_stream_band_health(spark, sf_dir):
         )
         grid.write.mode("overwrite").parquet(os.path.join(store, f"batch_id={batch_id}"))
 
-    q = (
-        stream.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _land, tmp)
     buckets = (
         spark.read.parquet(store)
         .groupBy("band", "band_sig")
@@ -2919,13 +2739,11 @@ def q_stream_char_class(spark, sf_dir):
 
     _clamp_shuffle(spark)
     d = _docs_par(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_charclass_")
+    tmp = scratch_dir("streamq_charclass")
     src = os.path.join(tmp, "docs")
     store = os.path.join(tmp, "grids")
-    ck = os.path.join(tmp, "ck")
     d.repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
     def _land(batch: DataFrame, batch_id: int) -> None:
         g = (
@@ -2947,13 +2765,7 @@ def q_stream_char_class(spark, sf_dir):
         )
         g.write.mode("overwrite").parquet(os.path.join(store, f"batch_id={batch_id}"))
 
-    q = (
-        stream.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _land, tmp)
     merged = (
         spark.read.parquet(store)
         .groupBy("source")
@@ -3004,9 +2816,8 @@ def q_stream_seasonal_index(spark, sf_dir):
     cross-multiplied dow rollup. Per-batch state is |types|×|active days|
     rows; the oracle is ORACLE_SEASONAL_INDEX VERBATIM."""
     ev = _events_stream(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_seasonal_")
+    tmp = scratch_dir("streamq_seasonal")
     store = os.path.join(tmp, "daily")
-    ck = os.path.join(tmp, "ck")
 
     def _land(batch: DataFrame, batch_id: int) -> None:
         g = batch.groupBy("event_type", F.to_date("ts").alias("day")).agg(
@@ -3014,13 +2825,7 @@ def q_stream_seasonal_index(spark, sf_dir):
         )
         g.write.mode("overwrite").parquet(os.path.join(store, f"batch_id={batch_id}"))
 
-    q = (
-        ev.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(ev, _land, tmp)
     daily = (
         spark.read.parquet(store)
         .groupBy("event_type", "day")
@@ -3082,13 +2887,11 @@ def q_stream_shard_skew(spark, sf_dir):
 
     _clamp_shuffle(spark)
     d = _docs_par(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_shard_")
+    tmp = scratch_dir("streamq_shard")
     src = os.path.join(tmp, "docs")
     store = os.path.join(tmp, "grids")
-    ck = os.path.join(tmp, "ck")
     d.repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
     def _land(batch: DataFrame, batch_id: int) -> None:
         toks = _dedup.whitespace_tokens(_dedup.normalize_text(F.col("text")))
@@ -3110,13 +2913,7 @@ def q_stream_shard_skew(spark, sf_dir):
         )
         g.write.mode("overwrite").parquet(os.path.join(store, f"batch_id={batch_id}"))
 
-    q = (
-        stream.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _land, tmp)
     per = (
         spark.read.parquet(store)
         .groupBy("shard")

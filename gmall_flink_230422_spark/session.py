@@ -6,8 +6,8 @@ We instead size for a real cluster: AQE on (runtime re-plan + skew-join
 handling), Arrow for any pandas exchange, and shuffle partitions sized from
 the environment. Session timezone defaults to UTC so results are directly
 comparable with the DuckDB oracle; the reference's GMT+8 rendering
-(R/utils/DateFormatUtil.java:21) is available via functions.datetime.GMALL_TZ
-for the reference-faithful pipelines.
+(R/utils/DateFormatUtil.java:21) is one ``F.from_utc_timestamp(ts,
+"Asia/Shanghai")`` away where a pipeline needs it.
 """
 
 from __future__ import annotations

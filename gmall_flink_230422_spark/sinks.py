@@ -59,11 +59,6 @@ def upsert_parquet(
     shutil.rmtree(tmp, ignore_errors=True)
 
 
-def console_sink(df: DataFrame, n: int = 20) -> None:
-    """S12: the reference's ``.print()`` debug sink."""
-    df.show(n, truncate=False)
-
-
 def fan_out_sink(
     raw_stream: DataFrame,
     split_fn,

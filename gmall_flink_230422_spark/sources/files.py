@@ -16,10 +16,16 @@ from pyspark.sql import types as T
 
 
 def stream_parquet(
-    spark: SparkSession, path: str, schema: T.StructType, files_per_trigger: int = 1
+    spark: SparkSession,
+    path: str,
+    schema: T.StructType | None = None,
+    files_per_trigger: int = 1,
 ) -> DataFrame:
     """Streaming file source: replays a parquet directory as micro-batches —
-    the deterministic stand-in for a Kafka topic in tests."""
+    the deterministic stand-in for a Kafka topic in tests. Without a
+    ``schema`` the one already landed at ``path`` is used."""
+    if schema is None:
+        schema = spark.read.parquet(path).schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", files_per_trigger)
